@@ -563,14 +563,12 @@ object Bench {
         // the index build (count + TakeOrdered) lands in setup, and
         // reuse ticks run zero full-corpus jobs before the query plan.
         graft.queries.AnnIndexTable).foreach { t =>
-      // ensure + seed: a FRESH materialization of the dedup tables seeds
-      // shared SessionCache entries as a side effect of building through
-      // the cached readers ("build cost lands in setup" — by design);
-      // seedSessionCaches replays that on the REUSE path, so per-query
-      // bench numbers never depend on whether a committed table happened
-      // to pre-exist (the r12↔r13 q41 0.14↔1.97 swing was exactly this
-      // asymmetry: a warm jacPairs in r12's fresh-ensure setup, billed
-      // to q41 under r13's reuse).
+      // ensure + seed: ensure leaves no SessionCache entry behind (its
+      // DAG tick releases what it built), and the seed warms the shared
+      // entries from the committed table — the one warming path, so
+      // per-query bench numbers never depend on whether a committed
+      // table happened to pre-exist (the r12↔r13 q41 0.14↔1.97 swing
+      // was exactly that asymmetry).
       try { t.ensure(spark, sfDir); t.seedSessionCaches(spark, sfDir) }
       catch { case scala.util.control.NonFatal(e) =>
         // NonFatal: an OOM'd JVM must die loudly, not continue into a

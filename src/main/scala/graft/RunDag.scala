@@ -58,9 +58,6 @@ object RunDag {
         case _ => graft.pipeline.Dag.streetLevelDag(sfDir)
       }
       val runs = graft.pipeline.Dag.materialize(spark, stages, workDir, refresh)
-      if (dagName == "curation")
-        graft.queries.CurationDag.sharedCacheKeys
-          .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
       runs.foreach(r => println(
         f"${r.name}%-16s rows=${r.rows}%8d  ${r.millis}%6d ms${if (r.skipped) "  (reused)" else ""}"))
     }

@@ -68,7 +68,6 @@ object StagedVsFused {
     val runs = graft.pipeline.Dag.materialize(
       spark, graft.queries.CurationDag.stages(sfDir), workDir, refresh = true)
     val stagedS = (System.nanoTime() - t1) / 1e9
-    releaseShared()
 
     val (fRows, fHash) = fingerprint(spark.read.parquet(fusedOut))
     val (sRows, sHash) = fingerprint(spark.read.parquet(s"$workDir/curated.parquet"))

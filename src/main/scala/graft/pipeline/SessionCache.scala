@@ -28,11 +28,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * lazy consumer was counting on. Releasing a key whose build is still
   * in flight is also safe: the builder detects the removal when it
   * finishes and unpersists its own result.
+  *
+  * Ownership: an entry belongs to whoever was running when it was FIRST
+  * created. A thread running under [[ownedBy]] tags every entry it
+  * creates — including entries a builder creates through nested
+  * getOrPersist calls, which run on the same thread — with that
+  * [[Owner]], and [[releaseOwned]] drops exactly those entries.
+  * [[graft.pipeline.Dag.materialize]] owns the entries its stages
+  * create and releases them before it returns, so a DAG tick (whose
+  * stages hand off only through persisted tables) leaves the session's
+  * cache as it found it. An entry that existed before the owner ran, or
+  * that the owner only read, keeps its previous owner; entries created
+  * outside any owner belong to the session until [[release]] or
+  * application end.
   */
 object SessionCache {
 
+  /** Identity of one owner of entries: a DAG tick. See [[ownedBy]]. */
+  private[pipeline] final class Owner
+
+  /** The owner tagging entries created on this thread, if any. */
+  private val currentOwner = new ThreadLocal[Owner]
+
+  /** Run `body` with every entry it first creates on this thread owned
+    * by `owner` (restoring the thread's previous owner after).
+    */
+  private[pipeline] def ownedBy[T](owner: Owner)(body: => T): T = {
+    val prev = currentOwner.get
+    currentOwner.set(owner)
+    try body finally currentOwner.set(prev)
+  }
+
   /** One cache slot; the lazy val is the per-entry build lock. */
-  private final class Entry(key: (SparkSession, String), build: () => DataFrame) {
+  private final class Entry(key: (SparkSession, String), build: () => DataFrame,
+      val owner: Owner) {
     @volatile private[SessionCache] var built: DataFrame = _
     lazy val df: DataFrame = {
       val t0 = System.nanoTime()
@@ -83,7 +112,8 @@ object SessionCache {
     * the same buildLog so Bench attributes it as `cache_build_ms` exactly
     * like a DataFrame cache build.
     */
-  private final class ValueEntry(key: (SparkSession, String), build: () => AnyRef) {
+  private final class ValueEntry(key: (SparkSession, String), build: () => AnyRef,
+      val owner: Owner) {
     lazy val value: AnyRef = {
       val t0 = System.nanoTime()
       val v = build()
@@ -136,7 +166,8 @@ object SessionCache {
   def getOrPersist(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val entry = synchronized {
       hookSession(spark)
-      cache.getOrElseUpdate((spark, key), new Entry((spark, key), () => build))
+      cache.getOrElseUpdate((spark, key),
+        new Entry((spark, key), () => build, currentOwner.get))
     }
     entry.df // may build; serializes per entry, not globally
   }
@@ -151,7 +182,8 @@ object SessionCache {
   def getOrBuildValue[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T = {
     val entry = synchronized {
       hookSession(spark)
-      values.getOrElseUpdate((spark, key), new ValueEntry((spark, key), () => build))
+      values.getOrElseUpdate((spark, key),
+        new ValueEntry((spark, key), () => build, currentOwner.get))
     }
     entry.value.asInstanceOf[T]
   }
@@ -160,11 +192,21 @@ object SessionCache {
     * an in-flight build unpersists itself on completion).
     */
   def release(spark: SparkSession, key: String): Unit = synchronized {
-    cache.remove((spark, key)).foreach { e =>
-      val d = e.built
-      if (d != null) d.unpersist(blocking = false)
-    }
+    cache.remove((spark, key)).foreach(unpersist)
     values.remove((spark, key)) // plain object: dropping the ref suffices
+  }
+
+  /** Drop every entry `owner` created, in any session. Entries it only
+    * read are untouched; the build log keeps their builds until drained.
+    */
+  private[pipeline] def releaseOwned(owner: Owner): Unit = synchronized {
+    cache.filterInPlace { (_, e) => if (e.owner eq owner) { unpersist(e); false } else true }
+    values.filterInPlace((_, v) => v.owner ne owner)
+  }
+
+  private def unpersist(e: Entry): Unit = {
+    val d = e.built
+    if (d != null) d.unpersist(blocking = false)
   }
 
   /** Live entry keys for a session — spec hook for bounded-storage
@@ -190,11 +232,7 @@ object SessionCache {
     */
   def releaseAll(key: String): Unit = synchronized {
     cache.filterInPlace { case ((_, k), e) =>
-      if (k == key) {
-        val d = e.built
-        if (d != null) d.unpersist(blocking = false)
-        false
-      } else true
+      if (k == key) { unpersist(e); false } else true
     }
     // Value entries share the release contract (ADVICE r13 #2): a table
     // rebuilt in place invalidates derived driver-side artifacts (the

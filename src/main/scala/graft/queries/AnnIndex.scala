@@ -35,11 +35,9 @@ object AnnIndexTable extends InputTable(
   override protected def onReplaced(sfDir: String): Unit =
     SessionCache.releaseAll(s"annIndex:$sfDir")
 
-  /** Reuse-path replay (the r13 q41 / r17 q80 invariant, enforced
-    * sweep-wide by InputTableSeedSpec): a fresh build seeds embN as a
-    * side effect of deriving the index; the reuse tick must reach the
-    * same state — [[Similarity.annIndex]] seeds both entries from the
-    * committed parquet without touching the corpus.
+  /** Warms the index and embN entries (the r13 q41 / r17 q80
+    * invariant, enforced by InputTableSeedSpec): [[Similarity.annIndex]]
+    * seeds both from the committed parquet without touching the corpus.
     */
   override def seedSessionCaches(spark: SparkSession, sfDir: String): Unit =
     materializedPath(sfDir).foreach { _ => Similarity.annIndex(spark, sfDir); () }

@@ -108,9 +108,9 @@ object CurationDag {
         DataQuality.uniqueness(_, Seq("doc_id")))))
 
   /** SessionCache keys the root stages build through the shared relation
-    * builders — a standalone DAG run (RunDag, specs) releases them after
-    * materialization; inside a query sweep the declared q99 releases
-    * already cover them.
+    * builders. Informational: [[graft.pipeline.Dag.materialize]] releases
+    * every entry a tick builds (these and the rest) before it returns,
+    * so no caller needs to release them.
     */
   val sharedCacheKeys: Seq[String] = Seq("shingleSets", "sh5", "jacPairs", "dedupClusters")
 }

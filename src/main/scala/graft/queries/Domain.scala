@@ -639,15 +639,12 @@ object GroupedDetectionsTable extends graft.pipeline.InputTable(
     Seq(graft.pipeline.Dag.Stage("grouped_detections", Nil,
       (s, _) => Domain.grouped(s, sfDir)))
 
-  /** The REUSE-path seed (the r13 q41 asymmetry, found again on the
-    * grouping table in r17): a FRESH ensure seeds the `grouped`
-    * SessionCache as a side effect of building through Domain.grouped,
-    * but a reuse tick runs zero jobs — so every sweep after the
-    * committing one re-ran the greedy kernel IN-SWEEP (q80: 1.25 s on
-    * the committing run vs 64 s single-JVM / 150 s multi-JVM after,
-    * billed to cache_build_ms at skew sf1). Seeding from the committed
-    * parquet restores the invariant that per-query numbers never
-    * depend on whether the table happened to pre-exist. Verify's gate
+  /** The seed (the r13 q41 asymmetry, found again on the grouping
+    * table in r17): without it a sweep re-runs the greedy kernel
+    * IN-SWEEP (q80: 64 s single-JVM / 150 s multi-JVM at skew sf1,
+    * billed to cache_build_ms). Seeding from the committed parquet
+    * keeps per-query numbers independent of whether the table happened
+    * to pre-exist — ensure leaves no entry either way. Verify's gate
     * path is untouched (it never seeds), so q80/q88's oracles still
     * race the freshly-run kernel, and the table's rows ARE the
     * kernel's output (same lineage), so consumers see identical data

@@ -23,10 +23,6 @@ class CurationDagSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def releaseShared(): Unit =
-    CurationDag.sharedCacheKeys
-      .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sf"))
-
   private def fileBytes(dir: java.io.File): Map[String, Long] =
     dir.listFiles().filter(_.isFile).map(f => f.getName -> f.length()).toMap
 
@@ -43,7 +39,6 @@ class CurationDagSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fromDag = spark.read.parquet(s"$work/curated.parquet")
       .select("doc_id", "lang", "split", "n_tokens", "pack_id")
       .orderBy("doc_id").collect().toSeq
-    releaseShared()
     val fromQuery = Registry.byName("q99_curation_pipeline").build(spark, sf)
       .collect().toSeq
     graft.queries.Registry.byName("q99_curation_pipeline").releases
@@ -67,7 +62,6 @@ class CurationDagSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mtimes = packDir.listFiles().map(f => f.getName -> f.lastModified()).toMap
     val again = graft.pipeline.Dag.materialize(
       spark, CurationDag.stages(sf), work, refresh = false)
-    releaseShared()
     assert(again.forall(_.skipped), "a no-change tick reuses every persisted stage")
     assert(fileBytes(packDir) == before)
     assert(packDir.listFiles().map(f => f.getName -> f.lastModified()).toMap == mtimes,
@@ -77,13 +71,29 @@ class CurationDagSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.Fs.rmTree(new java.io.File(s"$work/curated.parquet"))
     val third = graft.pipeline.Dag.materialize(
       spark, CurationDag.stages(sf), work, refresh = false)
-    releaseShared()
     assert(third.count(!_.skipped) == 1 && !third.last.skipped,
       "only the deleted stage re-materializes")
     val rebuilt = spark.read.parquet(s"$work/curated.parquet")
       .select("doc_id", "lang", "split", "n_tokens", "pack_id")
       .orderBy("doc_id").collect().toSeq
     assert(rebuilt == fromQuery)
+    graft.Fs.rmTree(new java.io.File(work))
+  }
+
+  test("a curation tick leaves the session cache as it found it and still logs its builds") {
+    import graft.pipeline.SessionCache
+    val session = spark.newSession()
+    val work = java.nio.file.Files.createTempDirectory("curation-cache").toString
+    val before = SessionCache.liveKeys(session)
+    graft.pipeline.Dag.materialize(session, CurationDag.stages(sf), work)
+    // toks and contamHits included: no entry a tick builds outlives it.
+    assert(SessionCache.liveKeys(session) == before,
+      s"entries left by the tick: ${SessionCache.liveKeys(session) -- before}")
+    // Which shared entries build depends on whether the dedup input
+    // tables are committed for this corpus; toks and contamHits always do.
+    val built = SessionCache.drainBuildLog(session).map(_._1).toSet
+    assert(Set(s"toks:$sf", s"contamHits:$sf").subsetOf(built),
+      s"build log after the tick: $built")
     graft.Fs.rmTree(new java.io.File(work))
   }
 }
