@@ -18,8 +18,9 @@ object Bench {
   private[graft] def runSweep(
       spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[QueryRun] = {
-    val sweptNames = queries.map(_._1).toSet
-    val runs = queries.sortBy(_._1).map { case (name, fn) =>
+    val sorted = queries.sortBy(_._1)
+    val releasePoints = graft.queries.Registry.releasePoints(sorted.map(_._1))
+    sorted.map { case (name, fn) =>
       val t0 = System.nanoTime()
       // Honest materialization: the noop sink evaluates EVERY column of
       // every row (unlike count(), which lets Catalyst prune unreferenced
@@ -35,12 +36,9 @@ object Bench {
           Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      // Post-timer: drop SessionCache entries whose last consumer (in
-      // this sorted order) just ran — bounds live storage over the sweep.
-      // `.get`: a name outside the registry (spec-planted queries) simply
-      // has no declared releases.
-      graft.queries.Registry.byName.get(name).toSeq.flatMap(_.releases)
-        .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
+      // Post-timer: drop SessionCache entries whose last consumer in
+      // this sweep just ran — bounds live storage over the sweep.
+      graft.queries.Registry.release(spark, sfDir, releasePoints.getOrElse(name, Nil))
       // SessionCache entries built DURING this query (eagerly
       // materialized and timed at the build site) attribute here: the
       // artifact's cache_build_ms separates one-time cache construction
@@ -79,17 +77,6 @@ object Bench {
       }
       QueryRun(name, dt, err, builtMs)
     }
-    // Release points declared on queries NOT in this sweep (ADVICE r18
-    // #3: a BENCH_ONLY/SKIP set excluding q54 left embN+annIndex live
-    // for the session — one pair per corpus dir). Firing the excluded
-    // queries' declared releases here reaches the same post-sweep cache
-    // state as a full sweep; session-lifetime entries (srpTightDupMass)
-    // declare no release point and stay untouched. Untimed: after the
-    // last query's timer.
-    graft.queries.Registry.all.filterNot(q => sweptNames(q.name))
-      .flatMap(_.releases).distinct
-      .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
-    runs
   }
 
   /** Reclaim threshold for the post-query gc gate: well under the
@@ -641,11 +628,11 @@ object Bench {
           // The operating point the measurement ran on: q53 just cached
           // its rung decision, so this is a cache read — the -1 default
           // only lands if the entry vanished (and is dropped with the
-          // releases below either way).
+          // release points below either way).
           val rung = graft.pipeline.SessionCache.getOrBuildValue(
             spark, s"srpArm:$sfDir")(Integer.valueOf(-1)).intValue()
-          recallQs.foreach(q => graft.queries.Registry.byName(q).releases
-            .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir")))
+          graft.queries.Registry.releasePoints(recallQs).values
+            .foreach(graft.queries.Registry.release(spark, sfDir, _))
           Some((counts(0), counts(1), rung))
         } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] recall measurement failed: $e"); None
@@ -671,9 +658,9 @@ object Bench {
             .select(col("a_id"), col("b_id"))
             .join(exactDf, Seq("a_id", "b_id")).count()
           exactDf.unpersist()
-          Seq("q41_ngram_jaccard", "q42_minhash_lsh", "q43_simhash")
-            .foreach(q => graft.queries.Registry.byName(q).releases
-              .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir")))
+          graft.queries.Registry.releasePoints(
+            Seq("q41_ngram_jaccard", "q42_minhash_lsh", "q43_simhash")).values
+            .foreach(graft.queries.Registry.release(spark, sfDir, _))
           Map("q42_minhash" -> (mh, exact), "q43_simhash_vs_jaccard" -> (sh, exact))
         } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] family recall measurement failed: $e"); Map.empty

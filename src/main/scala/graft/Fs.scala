@@ -16,16 +16,15 @@ private[graft] object Fs {
     * guide §1.2: q83's adaptive tile count needs only the feature row
     * count, and the count() job was one of ~6 sequential scheduler
     * round trips in a latency-bound query). None on any failure so the
-    * caller can fall back to the counting job; a wrong-but-successful
-    * read is not a risk (footer record counts are the same numbers a
-    * parquet count() aggregates).
+    * caller can fall back to the counting job, and None for a dir that
+    * has any subdirectory (a partition such as `k=1/`): its rows are not
+    * in the top-level footers, and summing those alone would undercount.
     */
   def parquetRowCount(path: String): Option[Long] =
     try {
-      val parts = Option(new java.io.File(path).listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      if (parts.isEmpty) None
+      val kids = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
+      val parts = kids.filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      if (parts.isEmpty || kids.exists(_.isDirectory)) None
       else Some(parts.map { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f.getAbsolutePath),

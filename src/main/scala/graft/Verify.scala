@@ -45,31 +45,17 @@ object Verify {
     }
     // Optional trailing args restrict the dump to named queries — the
     // local fast loop (tools/check_subset.py); the driver passes none.
-    // Sorted by name so QueryDef release points (declared against this
-    // order) fire after an entry's true last consumer.
-    val swept = SparkEntry.queries.keySet
-      .filter(name => only.isEmpty || only(name))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => swept(name) }
-      .foreach { case (name, fn) =>
+    val swept = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.isEmpty || only(name) }
+    val releasePoints = graft.queries.Registry.releasePoints(swept.map(_._1))
+    swept.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      graft.queries.Registry.byName(name).releases
-        .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
+      graft.queries.Registry.release(spark, sfDir, releasePoints.getOrElse(name, Nil))
     }
-    // Release points declared on queries EXCLUDED from this sweep
-    // (ADVICE r18 #3: a q110-only subset run left srpsigTight live for
-    // the session because its release rides q110's slot, but a subset
-    // EXCLUDING q54 likewise left embN+annIndex live). Firing them here
-    // reaches the same post-sweep cache state as the full sweep;
-    // deliberately-unreleased session-lifetime entries (srpTightDupMass)
-    // declare no release point and stay untouched.
-    graft.queries.Registry.all.filterNot(q => swept(q.name))
-      .flatMap(_.releases).distinct
-      .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sfDir"))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Jsons.quote(k)}: ${Jsons.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

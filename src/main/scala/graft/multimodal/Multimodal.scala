@@ -82,10 +82,7 @@ object Multimodal {
   /** [[media]] persisted once per (session, sfDir): q68/q90/q91/q92
     * each consume the same blobs, and per-query re-encoding paid the
     * UDF cost once per consumer — UDF-heavy queries were the noisiest
-    * cluster in the round-3 bench. Released after q92, the LAST
-    * consumer in the sorted sweep order (q68 < q90 < q91 < q92) that
-    * Verify and Bench drive — the same release-ordering convention as
-    * the Dedup caches.
+    * cluster in the round-3 bench.
     */
   def mediaCached(spark: SparkSession, sfDir: String): DataFrame =
     graft.pipeline.SessionCache.getOrPersist(spark, s"media:$sfDir")(media(spark, sfDir))

@@ -21,13 +21,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * accumulate one persisted relation per pipeline stage for its whole
   * life. Release is purely a storage knob: a consumer arriving after a
   * release simply rebuilds the entry through [[getOrPersist]], so a wrong
-  * release point costs recompute, never correctness. Query definitions
-  * declare their release points ([[graft.queries.QueryDef.releases]]) and
-  * the sweep harnesses (Verify/Bench) fire them after each query's
-  * action completes — releasing mid-plan would drop storage a pending
-  * lazy consumer was counting on. Releasing a key whose build is still
-  * in flight is also safe: the builder detects the removal when it
-  * finishes and unpersists its own result.
+  * release point costs recompute, never correctness. The sweep harnesses
+  * (Verify, Bench, Profile) derive their release points, for whatever
+  * order or subset they run, from the key prefixes each query declares it
+  * reads ([[graft.queries.QueryDef.uses]]) and the keys each entry's
+  * builder reads ([[graft.queries.Registry.builtFrom]]): each key is
+  * released after the last query in the run that may touch it
+  * ([[graft.queries.Registry.releasePoints]]), except the session-lifetime
+  * keys ([[graft.queries.Registry.sessionKeys]]), which live until
+  * application end. A harness fires a query's points after its action
+  * completes — releasing mid-plan would drop storage a pending lazy consumer was
+  * counting on. Releasing a key whose build is still in flight is also
+  * safe: the builder detects the removal when it finishes and unpersists
+  * its own result.
   *
   * Ownership: an entry belongs to whoever was running when it was FIRST
   * created. A thread running under [[ownedBy]] tags every entry it

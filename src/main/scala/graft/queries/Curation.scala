@@ -80,10 +80,7 @@ object Curation {
                n_tokens,
                ((running - n_tokens) // 4096)::BIGINT AS pack_id
         FROM packed ORDER BY doc_id"""),
-      // The pipeline is the true last consumer (sweep-sorted) of the
-      // token arrays, the 5-shingle sets, the decontamination hit rows,
-      // and the cluster labels — and of its own survivors cache.
-      releases = Seq("toks", "sh5", "contamHits", "docDigests", "dedupClusters", "curated"))( (spark, dir) => {
+      uses = Seq("toks", "docDigests", "contamHits", "dedupClusters", "curated"))( (spark, dir) => {
       val d = documents(spark, dir)
       val nTok = TextAnalysis.tokenArrays(spark, dir)
         .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"))
@@ -120,8 +117,7 @@ object Curation {
         .filter(TextAnalysis.stratKeep)
         .select(col("doc_id"), col("lang"), col("n_tokens"))
       // Survivors feed three subtrees (the pack's block sums, the pack
-      // itself, and the final join-back) — one SessionCache entry,
-      // self-released with this query's declared releases.
+      // itself, and the final join-back) — one SessionCache entry.
       val curated = graft.pipeline.SessionCache.getOrPersist(spark, s"curated:$dir")(keepers)
       TextAnalysis.packTokens(curated.select(col("doc_id"), col("n_tokens")), 4096L, 512L)
         .join(curated.select(col("doc_id"), col("lang")), "doc_id")

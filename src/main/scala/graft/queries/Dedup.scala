@@ -97,7 +97,6 @@ object Dedup {
     * q69's incremental probe consume the same rows, and sharing the
     * cache means the signature kernel and the band explode run once
     * per session, with one maintenance site for the banding scheme.
-    * Released with q69, the last consumer in sweep order.
     */
   private[queries] def minhashBands(spark: org.apache.spark.sql.SparkSession, dir: String) =
     graft.pipeline.SessionCache.getOrPersist(spark, s"mhBands:$dir") {
@@ -106,7 +105,7 @@ object Dedup {
 
   /** 5-token shingle sets (decontamination granularity), persisted per
     * (session, sfDir), cached BEFORE the explodes (the q41 lesson) —
-    * q59 and the q99 pipeline both explode it. Released with q99.
+    * q59 and the q99 pipeline both explode it.
     */
   private[queries] def sh5Sets(spark: org.apache.spark.sql.SparkSession, dir: String) =
     graft.pipeline.SessionCache.getOrPersist(spark, s"sh5:$dir") {
@@ -134,8 +133,7 @@ object Dedup {
     // train-side shingle explode + broadcast probe — the heavy part; the
     // RESULT is only the hit rows (train docs sharing a 5-shingle with
     // the eval set, a contamination-rate-bounded sliver of the corpus).
-    // Persist the hits once per (session, corpus); released with q99,
-    // the last consumer, like the sh5 cache it derives from.
+    // Persist the hits once per (session, corpus).
     graft.pipeline.SessionCache.getOrPersist(spark, s"contamHits:$dir") {
       val sh5 = sh5Sets(spark, dir)
       val ev = sh5.filter(EvalSet.isEval(col("doc_id")))
@@ -153,7 +151,6 @@ object Dedup {
     * full md5 pass over the fanout cache. One pass; null texts keep
     * their null digest, and each consumer applies its own null rule
     * exactly as before (q57 drops them, q40/q99 group by them).
-    * Released with q99, the last consumer in sweep order.
     */
   private[queries] def docDigests(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -164,7 +161,7 @@ object Dedup {
 
   /** Near-dup cluster labels (doc_id, cluster_id) for every pair-member
     * doc, persisted per (session, sfDir) — q55 declares it and the q99
-    * pipeline's canonical-member filter consumes it. Released with q99.
+    * pipeline's canonical-member filter consumes it.
     * The loop returns the final labels persisted+materialized UNDER THE
     * OUTPUT NAMES, so the entry needs no second persist and at no point
     * do two cached copies of the label relation coexist.
@@ -229,7 +226,8 @@ object Dedup {
           SELECT doc_id + 100000 AS doc_id, text FROM documents
         )
         SELECT md5(text) AS fp, min(doc_id) AS keep_id, count(*) AS n_copies
-        FROM crawl GROUP BY 1 ORDER BY keep_id"""))( (spark, dir) => {
+        FROM crawl GROUP BY 1 ORDER BY keep_id"""),
+      uses = Seq("docDigests"))( (spark, dir) => {
       // r20: both union branches read the shared [[docDigests]] cache —
       // one md5 pass per corpus instead of one per branch. Same digests
       // (md5 is deterministic), same null grouping, same aggregate.
@@ -261,7 +259,8 @@ object Dedup {
                round(${DS.jaccardExpr("a.shingles", "b.shingles")}, 6) AS jac
         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
         WHERE ${DS.jaccardExpr("a.shingles", "b.shingles")} >= 0.5
-        ORDER BY a_id, b_id"""))( (spark, dir) =>
+        ORDER BY a_id, b_id"""),
+      uses = Seq("jacPairs"))( (spark, dir) =>
       jacPairs(spark, dir).orderBy(col("a_id"), col("b_id"))),
 
     // ── MinHash + LSH: shingle→minhash→band→bucket-join→verify. The
@@ -287,7 +286,8 @@ object Dedup {
           JOIN sh sa ON sa.doc_id = c.a_id
           JOIN sh sb ON sb.doc_id = c.b_id)
         SELECT a_id, b_id, jac FROM verified
-        WHERE jac >= 0.5 ORDER BY a_id, b_id"""))( (spark, dir) => {
+        WHERE jac >= 0.5 ORDER BY a_id, b_id"""),
+      uses = Seq("shingleSets", "mhBands"))( (spark, dir) => {
       // Shared caches: shingleSets feeds the verify joins, and the
       // banded signature relation is the same one q69's incremental
       // probe consumes — signature kernel + band explode run once per
@@ -327,7 +327,7 @@ object Dedup {
         FROM s a JOIN s b ON a.doc_id < b.doc_id
         WHERE ${DS.hammingExpr("a.sh48", "b.sh48")} <= 6
         ORDER BY a_id, b_id"""),
-      releases = Seq("simhash"))( (spark, dir) => {
+      uses = Seq("simhash"))( (spark, dir) => {
       // Generalized pigeonhole (PartEnum/HmSearch shape): 9 bands over
       // the 48 bits, candidates = pairs agreeing on SOME 3-subset of
       // bands. Hamming ≤ 6 flips bits in ≤ 6 bands ⇒ ≥ 3 bands are
@@ -420,7 +420,7 @@ object Dedup {
         SELECT b.doc_id, b.digest FROM batch b
         WHERE b.digest NOT IN (SELECT digest FROM corpus)
         ORDER BY b.doc_id"""),
-      releases = Seq("corpusBloom"))( (spark, dir) => {
+      uses = Seq("docDigests", "corpusBloom"))( (spark, dir) => {
       // r20: the three md5 scans (corpus, both batch branches) plus the
       // bloom build's fourth pass all read the shared [[docDigests]]
       // cache — one md5 pass per corpus. Null digests (null text) have
@@ -500,10 +500,10 @@ object Dedup {
         SELECT tr.doc_id, count(*) AS n_shared
         FROM tr JOIN ev ON tr.s = ev.s
         GROUP BY tr.doc_id ORDER BY tr.doc_id"""),
-      )( (spark, dir) =>
+      uses = Seq("contamHits"))( (spark, dir) =>
       // One aggregation over the shared probe relation ([[contamProbe]],
       // built off the sh5Sets cache — uncached, the tokenize+shingle
-      // work measured 8.1 s vs ~1 s at sf0.1). Released with q99.
+      // work measured 8.1 s vs ~1 s at sf0.1).
       contamProbe(spark, dir)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
         .orderBy(col("doc_id"))),
@@ -527,10 +527,7 @@ object Dedup {
         WITH RECURSIVE ${shinglesSqlCte.trim.stripPrefix("WITH")},
         $closureSqlCtes
         SELECT doc_id, cluster_id FROM lab ORDER BY doc_id"""),
-      // Last consumer (sorted order) of the pair relation; the cluster
-      // labels themselves release with q99 (the pipeline's canonical
-      // filter) and shingleSets with q69.
-      releases = Seq("jacPairs"))( (spark, dir) =>
+      uses = Seq("dedupClusters"))( (spark, dir) =>
       dedupClustersRel(spark, dir).orderBy(col("doc_id"))),
 
     // ── Quality-aware canonical selection: q55 labels clusters; a real
@@ -558,7 +555,8 @@ object Dedup {
         FROM m JOIN lab l ON l.cluster_id = m.cluster_id
         JOIN q ON q.doc_id = l.doc_id AND q.quality = m.mq
         GROUP BY m.cluster_id, m.n_members, m.mq
-        ORDER BY m.cluster_id"""))( (spark, dir) =>
+        ORDER BY m.cluster_id"""),
+      uses = Seq("dedupClusters"))( (spark, dir) =>
       // The argmax compares ROUND(quality, 6) on both sides (ADVICE r10
       // #4): raw-double argmax would let ULP drift between Spark's and
       // DuckDB's quality spelling flip the keeper on a near-tie; at 6
@@ -654,9 +652,7 @@ object Dedup {
           JOIN sh sc ON sc.doc_id = cand.c_id)
         SELECT b_id, c_id, jac FROM verified
         WHERE jac >= 0.5 ORDER BY b_id, c_id"""),
-      // Last tokenize+shingle+band consumer in sorted sweep order
-      // (q41 < q42 < q43 < q55 < q69).
-      releases = Seq("shingleSets", "mhBands"))( (spark, dir) => {
+      uses = Seq("shingleSets", "mhBands"))( (spark, dir) => {
       val sh = shingleSets(spark, dir)
       val bands = minhashBands(spark, dir)
       val cand = bands.filter(col("doc_id") % 5 === 0).as("b")

@@ -61,7 +61,7 @@ object Domain {
     * the mesh: identical arguments, so the 600k-row best-per-group
     * window, the pose join, the vertex explode, and the ray UDF run
     * ONCE per (session, sfDir) — the same materialized-intermediate
-    * pattern as `grouped`. Released with q86 (its last consumer).
+    * pattern as `grouped`.
     */
   private def bestRays(spark: org.apache.spark.sql.SparkSession, dir: String) =
     graft.pipeline.SessionCache.getOrPersist(spark, s"bestRays:$dir") {
@@ -250,9 +250,8 @@ object Domain {
     * (session, sfDir): kind 0 rows are q81's pair relation
     * (a_idx < b_idx, iou_raw ≥ 0.02), kind 1 rows are the partnered-id
     * set ((file_name, a_idx) with any strictly-positive-IoU partner;
-    * b_idx/iou_raw are -1/0 fillers). Built at q81 (first consumer in
-    * sweep order), released by q88 (isolatedGrouped's build is the last
-    * reader). PairEnumerationPropertySpec pins both projections equal
+    * b_idx/iou_raw are -1/0 fillers); q81 reads it, and so does the
+    * isolatedGrouped build. PairEnumerationPropertySpec pins both projections equal
     * to the standalone kernels on adversarial boxes; the standalone
     * kernels remain the spec surface. Accounting: sweep_stats.
     * pairs_enumerated drops ~2× at every SF from this change — one
@@ -374,7 +373,8 @@ object Domain {
       Some(s"""
         SELECT file_name, det_idx, x1, y1, x2, y2, score, class
         FROM (${Synthetic.detectionsSql})
-        ORDER BY file_name, det_idx"""))((spark, dir) =>
+        ORDER BY file_name, det_idx"""),
+      uses = Seq("detections"))((spark, dir) =>
       Synthetic.detectionsCached(spark, dir).orderBy(col("file_name"), col("det_idx"))),
 
     // ── U1 as a codegen'd column expression on the J4 self-join shape:
@@ -384,9 +384,6 @@ object Domain {
     // never crosses panoramas.
     QueryDef(
       "q81_iou_pairs",
-      // No release here since r19: the fused sweep relation (sweepIou)
-      // is also isolatedGrouped's input — q88, its last reader, releases.
-      releases = Nil,
       oracle = Some(s"""
         WITH det AS (${Synthetic.detectionsSql}),
         inv AS (
@@ -397,7 +394,8 @@ object Domain {
         FROM inv a JOIN inv b
           ON a.file_name = b.file_name AND a.det_idx < b.det_idx
         WHERE ${GeoSql.iouFromInvariantsExpr("a", "b")} >= 0.02
-        ORDER BY file_name, a_idx, b_idx"""))( (spark, dir) => {
+        ORDER BY file_name, a_idx, b_idx"""),
+      uses = Seq("sweepIou"))( (spark, dir) => {
       // Evolution of this plan, all output-identical (the oracle is the
       // declarative spec and never moved):
       //   round 2: file_name equi-join + native IouKernel call (the
@@ -452,7 +450,7 @@ object Domain {
     // though the group_idx labels themselves are iteration-order
     // artifacts, and value-raceable against the materialized kernel
     // output via the declared eps oracle.
-    QueryDef("q80_grouped_detections", None, noOracleReason = Some(
+    QueryDef("q80_grouped_detections", None, uses = Seq("grouped"), noOracleReason = Some(
       "order-dependent greedy IoU grouping (reference bbox_grouping loop) is not " +
         "SQL-expressible and its float scores poison a cross-engine hash; kernel " +
         "pinned by BBoxSpec golden fixtures (reference's own Python) and the fully " +
@@ -478,11 +476,7 @@ object Domain {
 
     // ── A4+J1+M10+U2: best-per-group → broadcast pose join → stride
     // subsample → pixel-to-3D ray. Rows-only (libm trig drift).
-    // releases "grouped": with the shared bestRays relation aboard, the
-    // ray build here is grouped's LAST consumer in sweep order (q86 now
-    // reads only bestRays) — holding the 600k-row kernel output across
-    // q83/q84/q85 would be storage for no reader.
-    QueryDef("q82_best_rays", None, releases = Seq("grouped"), noOracleReason = Some(
+    QueryDef("q82_best_rays", None, uses = Seq("bestRays"), noOracleReason = Some(
       "pixel-to-3D ray chain leans on libm trig whose ULP drift vs DuckDB poisons a " +
         "float hash over 18k rows; the same kernel is fully oracled on deterministic " +
         "slices by q89/q95 (op-for-op SQL mirror) and golden-pinned by ProjectionSpec; " +
@@ -511,7 +505,7 @@ object Domain {
     // WallPlanesTilingSpec. Features come through Synthetic.wallFeatures:
     // a scan of the materialized input table when Bench/Verify ensured
     // one (the upstream-job shape), the live derivation otherwise.
-    QueryDef("q83_wall_planes", None, releases = Seq("wallFeatLive"), noOracleReason = Some(
+    QueryDef("q83_wall_planes", None, uses = Seq("wallFeatLive"), noOracleReason = Some(
       "DBSCAN cluster labels are reachability-order artifacts with no SQL oracle; " +
         "kernel pinned by DbscanSpec + WallPlanesTilingSpec (tiled≡global), and the " +
         "oracled companion q93 hash-verifies the full feature prologue; toleranced " +
@@ -533,7 +527,7 @@ object Domain {
       // materialization failed, live derivation), the count would
       // execute the whole feature derivation once and wallPlanesScaled
       // a second time — persist it so the fallback pays the derivation
-      // once, released right after this query (its only consumer).
+      // once.
       // r20 (guide §1.2): on the table path the tile count derives from
       // the parquet FOOTERS on the driver — the same number the count()
       // job aggregated, without one of the ~6 sequential scheduler round
@@ -563,7 +557,7 @@ object Domain {
     // pose join → rays → intersect with the synthetic building mesh.
     // Rows-only (BVH + trig); TriMeshSpec pins the kernel against
     // brute-force all-triangle intersection.
-    QueryDef("q86_mesh_intersect", None, releases = Seq("bestRays"), noOracleReason = Some(
+    QueryDef("q86_mesh_intersect", None, uses = Seq("bestRays"), noOracleReason = Some(
       "BVH first-hit selection over float ray-triangle distances is hash-unstable " +
         "across engines (ULP ties flip the winning triangle); TriMeshSpec pins the " +
         "BVH against brute-force, and companion q94 hash-verifies a SQL " +
@@ -604,7 +598,8 @@ object Domain {
                     ELSE 'POLYGON ((' || ix1 || ' ' || iy1 || ', ' || ix2 || ' ' || iy1 || ', ' ||
                          ix2 || ' ' || iy2 || ', ' || ix1 || ' ' || iy2 || ', ' ||
                          ix1 || ' ' || iy1 || '))' END AS wkt
-        FROM snapped ORDER BY det_idx, wkt"""))( (spark, dir) => {
+        FROM snapped ORDER BY det_idx, wkt"""),
+      uses = Seq("detections"))( (spark, dir) => {
       val wktUdf = udf { (x1: Long, y1: Long, x2: Long, y2: Long) =>
         if (x2 <= x1) graft.geo.Wkt.empty
         else graft.geo.Wkt.polygon(Seq(

@@ -231,9 +231,7 @@ object DomainOracles {
         $isoCte
         SELECT file_name, det_idx, group_idx
         FROM iso ORDER BY file_name, det_idx"""),
-      // Last reader (sweep-sorted) of the fused sweep relation: q81
-      // built it; isolatedGrouped's build here is its final consumer.
-      releases = Seq("sweepIou"))( (spark, dir) =>
+      uses = Seq("isolatedGrouped"))( (spark, dir) =>
       isolatedGrouped(spark, dir)
         .select(col("file_name"), col("det_idx"), col("group_idx"))
         .orderBy(col("file_name"), col("det_idx"))),
@@ -257,7 +255,8 @@ object DomainOracles {
         SELECT file_name, group_idx, v_idx::INT AS v_idx,
                round((rx) - (ox), 6) AS dx, round((ry) - (oy), 6) AS dy,
                round((rz) - (oz), 6) AS dz
-        FROM rays ORDER BY file_name, group_idx, v_idx"""))( (spark, dir) =>
+        FROM rays ORDER BY file_name, group_idx, v_idx"""),
+      uses = Seq("isolatedGrouped"))( (spark, dir) =>
       StreetLevel.vertexRays(isolatedGrouped(spark, dir), Synthetic.poses(spark, dir), spacing = 2)
         .select(col("file_name"), col("group_idx"), col("v_idx"),
           round(col("rx") - col("ox"), 6).as("dx"),
@@ -281,8 +280,7 @@ object DomainOracles {
                round((rx) - (ox), 6) AS dx, round((ry) - (oy), 6) AS dy,
                round((rz) - (oz), 6) AS dz
         FROM rays ORDER BY file_name, group_idx, v_idx"""),
-      // Last consumer (sorted order) of the raw detections cache.
-      releases = Seq("detections"))( (spark, dir) => {
+      uses = Seq("detections"))( (spark, dir) => {
       // Direction output, not endpoint — see q89's rounding-margin note.
       val det = Synthetic.detectionsCached(spark, dir)
         .withColumn("group_idx", (col("det_idx") - 1).cast("int"))
@@ -355,7 +353,7 @@ object DomainOracles {
           ON r.file_name = h.file_name AND r.group_idx = h.group_idx
          AND r.v_idx = h.v_idx
         ORDER BY r.file_name, r.group_idx, r.v_idx"""),
-      releases = Seq("isolatedGrouped"))( (spark, dir) => {
+      uses = Seq("isolatedGrouped"))( (spark, dir) => {
       val rays = StreetLevel.vertexRays(
         isolatedGrouped(spark, dir), Synthetic.poses(spark, dir), spacing = 2)
       RayMesh.firstHits(rays, RayMesh.syntheticBuilding())

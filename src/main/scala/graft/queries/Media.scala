@@ -22,7 +22,7 @@ object Media {
     * same bytes, and each previously re-encoded the full panorama set
     * through its own UDF — double the encode cost and double the
     * exposure to UDF-timing noise (the round-3 bench's apparent
-    * regressions were exactly this cluster). Released after q87.
+    * regressions were exactly this cluster).
     */
   private def panoramas(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -142,7 +142,8 @@ object Media {
                CAST(sum($lenSql) AS BIGINT) AS total_payload,
                round(avg(16 + doc_id % 48), 6) AS avg_width,
                round(avg(16 + doc_id % 32), 6) AS avg_height
-        FROM documents GROUP BY 1 ORDER BY kind"""))( (spark, dir) =>
+        FROM documents GROUP BY 1 ORDER BY kind"""),
+      uses = Seq("media"))( (spark, dir) =>
       Multimodal.withMeta(Multimodal.mediaCached(spark, dir))
         .groupBy(col("kind"))
         .agg(count(lit(1)).as("n"),
@@ -165,7 +166,8 @@ object Media {
                  list_transform(generate_series(0, $lenSql - 1),
                                 i -> (doc_id * 31 + i * 7) % 256) AS payload
           FROM documents)
-        ORDER BY media_id"""))( (spark, dir) =>
+        ORDER BY media_id"""),
+      uses = Seq("media"))( (spark, dir) =>
       Multimodal.withFeatures(Multimodal.mediaCached(spark, dir))
         .select(col("media_id"), round(col("mean_byte"), 6).as("mean_byte"),
           col("checksum"))
@@ -175,7 +177,7 @@ object Media {
     // panoramas — images × 4 thetas fan-out, per-view checksum. Rows-only
     // (trig inside the projection); kernel pinned by WarpSpec against
     // the golden-tested geometry.
-    QueryDef("q87_perspective_views", None, releases = Seq("panos"), noOracleReason = Some(
+    QueryDef("q87_perspective_views", None, uses = Seq("panos"), noOracleReason = Some(
       "equirect-to-perspective warp sums millions of trig-placed pixels; libm ULP " +
         "drift vs DuckDB flips half-pixel rounding and the checksum hash; geometry " +
         "golden-pinned by WarpSpec and the oracled companion q75 runs the same " +
@@ -206,7 +208,8 @@ object Media {
     // no float tolerance anywhere in the output.
     QueryDef(
       "q75_view_sums",
-      Some(viewSumsSql(48, 48, 60, Seq(0, 90, 180, 270), -10)))( (spark, dir) => {
+      Some(viewSumsSql(48, 48, 60, Seq(0, 90, 180, 270), -10)),
+      uses = Seq("panos"))( (spark, dir) => {
       val viewSum = udf { (view: Array[Byte]) =>
         var s = 0L; view.foreach(b => s += (b & 0xff)); s
       }
@@ -305,7 +308,8 @@ object Media {
               FROM j)
         SELECT media_id, CAST(plen // 4 AS BIGINT) AS out_len,
                CAST(sum(b) AS BIGINT) AS resized_sum
-        FROM v GROUP BY media_id, plen ORDER BY media_id"""))( (spark, dir) => {
+        FROM v GROUP BY media_id, plen ORDER BY media_id"""),
+      uses = Seq("media"))( (spark, dir) => {
       val byteSum = udf { (b: Array[Byte]) =>
         if (b == null) None
         else { var s = 0L; b.foreach(x => s += x & 0xff); Some(s) }
@@ -329,7 +333,7 @@ object Media {
              (SELECT unnest(generate_series(0, 15)) AS j)
         WHERE f % 4 = 0 AND f < $lenSql // 16
         GROUP BY 1, 2 ORDER BY media_id, frame_idx"""),
-      releases = Seq("media"))( (spark, dir) =>
+      uses = Seq("media"))( (spark, dir) =>
       Multimodal.frameSamples(Multimodal.mediaCached(spark, dir))
         .select(col("media_id"), col("frame_idx").cast("long").as("frame_idx"),
           col("frame_sum"))

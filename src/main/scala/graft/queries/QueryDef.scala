@@ -14,12 +14,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                 Verify dumps these as `oracle_exclusions.json` so the
   *                 driver's gate can tell "explicitly excluded, verified
   *                 elsewhere" from "unverified" (ADVICE r9 #2).
-  * @param releases SessionCache key prefixes whose LAST consumer (in the
-  *                 harnesses' sorted-by-name sweep order) is this query:
-  *                 Verify/Bench release them once this query's action
-  *                 completes. A release point that turns out early (a
-  *                 spec or ad-hoc caller arriving later) just rebuilds
-  *                 the entry — storage knob, never correctness.
+  * @param uses     SessionCache key prefixes this query's own plan code
+  *                 reads (builds or hits). Keys that those entries'
+  *                 builders read in turn are [[Registry.builtFrom]]'s, not
+  *                 repeated here. A fact about the query alone: the sweep
+  *                 harnesses get their release timing from
+  *                 [[Registry.releasePoints]], which derives it from
+  *                 `uses` for whatever order or subset they run.
   * @param build    the Spark-side plan builder. MUST be deterministic
   *                 (stable ORDER BY, no uuid()/rand()) and column names
   *                 MUST match the oracle's exactly — the driver sorts
@@ -52,7 +53,7 @@ final case class EpsOracle(
 final case class QueryDef(
     name: String,
     oracle: Option[String],
-    releases: Seq[String] = Nil,
+    uses: Seq[String] = Nil,
     noOracleReason: Option[String] = None,
     epsOracle: Option[EpsOracle] = None)(
     val build: (SparkSession, String) => DataFrame)

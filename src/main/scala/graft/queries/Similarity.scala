@@ -81,8 +81,7 @@ object Similarity {
   /** Corpus row count, cached per (session, corpus) as a SessionCache
     * value entry (ADVICE r16 #2: collectAnchors used to run its own
     * full count() action on every invocation, so each IVF query paid
-    * two corpus actions for anchor selection). Declared in each IVF
-    * query's `releases`, so the harness loop retires it like any cache.
+    * two corpus actions for anchor selection).
     */
   private[queries] def corpusCount(spark: org.apache.spark.sql.SparkSession,
       dir: String): Long =
@@ -187,7 +186,7 @@ object Similarity {
   /** The corpus's embedding dimension, probed ONCE per (session, corpus)
     * as a session-lifetime value entry (r20; the srpsig AND srpsigTight
     * builds each re-ran this 1-row job every sweep — corpus metadata,
-    * like the srpTightDupMass precedent, so no release point). The
+    * so it is one of [[Registry.sessionKeys]]). The
     * signature kernel still throws on any row whose dimension disagrees,
     * so a wrong cached value cannot silently mis-sign.
     */
@@ -499,11 +498,10 @@ object Similarity {
     val sigs = srpSignatures(spark, dir)
     // The rung decision is CORPUS METADATA — a deterministic function of
     // the signature relation — so it caches per (session, corpus) like
-    // the q57 bloom (SessionCache value entry, released with srpsig's
-    // q53 sweep slot): production computes it once per corpus version
-    // when the signature index is built, not per query. The occupancy
-    // aggregates themselves (one per probed rung) remain the measured,
-    // lazily-escalating probe SrpLshSpec pins.
+    // the q57 bloom (SessionCache value entry): production computes it
+    // once per corpus version when the signature index is built, not
+    // per query. The occupancy aggregates themselves (one per probed
+    // rung) remain the measured, lazily-escalating probe SrpLshSpec pins.
     val arm = graft.pipeline.SessionCache.getOrBuildValue(
       spark, s"srpArm:$dir")(Integer.valueOf(srpSelectArm(sigs)))
     srpCandidatesForRung(sigs, arm.intValue())
@@ -644,8 +642,8 @@ object Similarity {
     * exact-embedding groups of size c — the average number of extra
     * same-key partners per row that exact cliques alone would push into
     * EVERY band bucket. One aggregate over the already-cached signature
-    * relation (VERDICT r17 #3); cached per (session, corpus) and
-    * released with q110's sweep slot. Grouping on the exact vector (not
+    * relation (VERDICT r17 #3); cached for the session (one of
+    * [[Registry.sessionKeys]]). Grouping on the exact vector (not
     * the 128-bit signature) measures precisely the mass the canonical
     * route below can remove — signature-only collisions from
     * near-identical-but-distinct vectors are real near-dups no exact
@@ -873,7 +871,7 @@ object Similarity {
           FROM cells q JOIN cells c ON q.cell = c.cell AND c.vec_id != q.vec_id
           WHERE q.vec_id < 5)
         WHERE rnk <= 5 ORDER BY q_id, rnk"""),
-      releases = Nil)( (spark, dir) => {
+      uses = Seq("annIndex"))( (spark, dir) => {
       val e = embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"), VF.norm(col("embedding")).as("nrm"))
       val idx = annIndex(spark, dir)
@@ -924,12 +922,7 @@ object Similarity {
                  round(${VS.dotExpr("p.qv", "c.v")} / (p.qn * c.nrm), 6) AS cos
           FROM probes p JOIN cells c ON c.cell = p.cell AND c.vec_id != p.q_id)
         WHERE rnk <= 5 ORDER BY q_id, rnk"""),
-      // embN releases HERE only: q54 is the last IVF consumer in the
-      // harnesses' sorted sweep order (q109 < q49 < q51 < q54), so the
-      // cached corpus count survives across all four within a sweep
-      // (ADVICE r17 #3 — releasing on each consumer re-ran the count).
-      // annIndex rides the same slot: q54 is its last consumer too.
-      releases = Seq("embN", "annIndex"))( (spark, dir) => {
+      uses = Seq("annIndex"))( (spark, dir) => {
       val e = embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"), VF.norm(col("embedding")).as("nrm"))
       val idx = annIndex(spark, dir)
@@ -1033,7 +1026,7 @@ object Similarity {
                  round(${VS.dotExpr("fp.qv", "c.v")} / (fp.qn * c.nrm), 6) AS cos
           FROM fprobe fp JOIN cells c ON c.cell = fp.cell AND c.vec_id != fp.q_id)
         WHERE rnk <= 5 ORDER BY q_id, rnk"""),
-      releases = Nil)( (spark, dir) => {
+      uses = Seq("annIndex"))( (spark, dir) => {
       val e = embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"), VF.norm(col("embedding")).as("nrm"))
       val idx = annIndex(spark, dir)
@@ -1143,7 +1136,7 @@ object Similarity {
           FROM cand d JOIN n q ON q.vec_id = d.q_id
                       JOIN n c ON c.vec_id = d.neighbor_id)
         WHERE rnk <= 5 ORDER BY q_id, rnk"""),
-      releases = Nil)( (spark, dir) => {
+      uses = Seq("annIndex"))( (spark, dir) => {
       val e = embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"), VF.norm(col("embedding")).as("nrm"))
       val idx = annIndex(spark, dir)
@@ -1222,7 +1215,7 @@ object Similarity {
         FROM truth t
         LEFT JOIN approx a ON a.q_id = t.q_id AND a.neighbor_id = t.neighbor_id
         GROUP BY t.q_id ORDER BY t.q_id"""),
-      releases = Nil)( (spark, dir) => {
+      uses = Seq("annIndex"))( (spark, dir) => {
       val e = embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"), VF.norm(col("embedding")).as("nrm"))
       val idx = annIndex(spark, dir)
@@ -1376,7 +1369,7 @@ object Similarity {
     QueryDef(
       "q53_srp_lsh",
       Some(srpOracleSql(0.45, srpHammingMax, srpEnumBudget)),
-      releases = Seq("srpsig", "srpArm"))( (spark, dir) =>
+      uses = Seq("srpsig", "srpArm"))( (spark, dir) =>
       srpCandidates(spark, dir)
         .join(srpSignatures(spark, dir)
           .select(col("vec_id").as("a_id"), col("embedding").as("av"), col("nrm").as("an")), "a_id")
@@ -1399,13 +1392,7 @@ object Similarity {
       "q110_srp_highcos",
       Some(srpOracleSql(srpTightThreshold, srpTightHammingMax, srpTightEnumBudget,
         tightCorpusCte)),
-      // srpTightDupMass deliberately NOT released: it is immutable
-      // per-corpus metadata (one Double) whose aggregate costs a full
-      // signature-relation pass — releasing it per sweep re-billed that
-      // job to every sweep's q110 (+1.6 s cache_build at sf0.1, caught
-      // in the r18 bench). The multi-GB relations still release.
-      releases = Seq("srpsigTight", "srpTightArm",
-        "srpsigTightCanon"))( (spark, dir) =>
+      uses = Seq("srpsigTight", "srpTightDupMass", "srpsigTightCanon", "srpTightArm"))( (spark, dir) =>
       srpCandidatesTight(spark, dir)
         .join(srpSignaturesTight(spark, dir)
           .select(col("vec_id").as("a_id"), col("embedding").as("av"), col("nrm").as("an")), "a_id")

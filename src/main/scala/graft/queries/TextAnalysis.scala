@@ -40,7 +40,7 @@ object TextAnalysis {
 
   /** (doc_id, lang, toks) with the tokenizer applied once, persisted
     * per (session, sfDir) via SessionCache — q34/q35 explode it, q66
-    * sizes it, q78 aggregates it by lang, q99 consumes and releases it;
+    * sizes it, q78 aggregates it by lang, q99 consumes it;
     * the previous per-invocation inline `.persist()` leaked one cache
     * entry per call with no eviction.
     */
@@ -221,7 +221,8 @@ object TextAnalysis {
       Some(s"""
         WITH t AS (SELECT unnest(${TS.toksExpr("text")}) AS term FROM documents)
         SELECT term, count(*) AS n FROM t
-        GROUP BY term ORDER BY n DESC, term LIMIT 30"""))( (spark, dir) => {
+        GROUP BY term ORDER BY n DESC, term LIMIT 30"""),
+      uses = Seq("toks"))( (spark, dir) => {
       // Cached pre-explode (shared with q35 via SessionCache — one
       // entry, evicted with the session): Generate re-evaluates
       // expensive generator inputs (see Dedup q41), making
@@ -305,9 +306,7 @@ object TextAnalysis {
                      sum(n_tokens) OVER (ORDER BY doc_id) AS running FROM n)
         SELECT doc_id, n_tokens, ((running - n_tokens) // 4096)::BIGINT AS pack_id
         FROM r ORDER BY doc_id"""),
-      // tokenArrays releases with q99 (the curation pipeline), the last
-      // consumer in sorted sweep order (q34 < q35 < q66 < q78 < q99).
-      )( (spark, dir) =>
+      uses = Seq("toks"))( (spark, dir) =>
       packTokens(
         tokenArrays(spark, dir)
           .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens")),
@@ -376,7 +375,8 @@ object TextAnalysis {
         SELECT d.doc_id, d.lang, d.source
         FROM documents d JOIN r USING (lang)
         WHERE ${TS.stringHashExpr("'strat|' || d.doc_id::VARCHAR")} % 100 < r.cut
-        ORDER BY d.doc_id"""))( (spark, dir) => {
+        ORDER BY d.doc_id"""),
+      uses = Seq("toks"))( (spark, dir) => {
       val inv = tokenArrays(spark, dir)
         .groupBy(col("lang"))
         .agg(sum(TF.tokenCount(col("toks"))).as("tokens"))
@@ -554,9 +554,8 @@ object TextAnalysis {
         WHERE tok_before < 20000 ORDER BY doc_id"""),
       // budgetBefore consumes d0 from two subtrees (the offsets groupBy
       // and the main window path); without the cache the full
-      // tokenize+quality kernel would run twice per execution. Sole
-      // consumer → released right after this query materializes.
-      releases = Seq("q100d0"))( (spark, dir) => {
+      // tokenize+quality kernel would run twice per execution.
+      uses = Seq("q100d0"))( (spark, dir) => {
       val d0 = graft.pipeline.SessionCache.getOrPersist(spark, s"q100d0:$dir") {
         documents(spark, dir)
           .select(col("doc_id"), col("text"), TF.tokens(col("text")).as("toks"))
@@ -585,7 +584,8 @@ object TextAnalysis {
                    ORDER BY round(tf * ln(n_docs / df), 6) DESC, term) AS rn
           FROM tf JOIN df USING (term) CROSS JOIN nd)
         SELECT doc_id, term AS top_term, w
-        FROM scored WHERE rn = 1 ORDER BY doc_id"""))( (spark, dir) => {
+        FROM scored WHERE rn = 1 ORDER BY doc_id"""),
+      uses = Seq("toks"))( (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       // Token arrays cached pre-explode (SessionCache entry shared with
       // q34). r19 (guide §2.3 "aggregate before you shuffle" / §1.2

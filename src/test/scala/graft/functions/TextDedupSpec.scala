@@ -136,15 +136,25 @@ class TextDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       // and THROWS on overflow, while real shingle hashes live in
       // [0, 1e9+7) where overflow is impossible — the kernel's domain.
       (9005L, Seq[java.lang.Long](-1L, 4000000000L, -4000000000L)),
-      (9006L, Seq[java.lang.Long](DedupFunctions.P - 1, DedupFunctions.P, 1000000007L))
+      (9006L, Seq[java.lang.Long](DedupFunctions.P - 1, DedupFunctions.P, 1000000007L)),
+      // A null shingle array: the native kernel yields a null signature,
+      // the declarative spelling K nulls. The signatures differ, but
+      // both must give the same (all-null) band keys.
+      (9007L, null)
     ).toDF("id", "hs")
     for (df <- Seq(corpus, adversarial)) {
-      val diffs = df.select(col("id"),
-          DedupFunctions.minhashSignature(col("hs")).as("fast"),
-          DedupFunctions.minhashSignatureDeclarative(col("hs")).as("slow"))
-        .filter(not(col("fast") <=> col("slow")))
+      val sigs = df.select(col("id"), col("hs"),
+        DedupFunctions.minhashSignature(col("hs")).as("fast"),
+        DedupFunctions.minhashSignatureDeclarative(col("hs")).as("slow"))
+      val diffs = sigs.filter(col("hs").isNotNull && not(col("fast") <=> col("slow")))
       assert(diffs.count() == 0, s"native vs declarative mismatch: ${diffs.take(3).toSeq}")
+      val bandDiffs = sigs.filter(not(
+        DedupFunctions.bandKeys(col("fast")) <=> DedupFunctions.bandKeys(col("slow"))))
+      assert(bandDiffs.count() == 0, s"band keys differ: ${bandDiffs.take(3).toSeq}")
     }
+    assert(adversarial.filter(col("hs").isNull)
+      .select(DedupFunctions.minhashSignature(col("hs")).isNull).head().getBoolean(0),
+      "the null-input case is exercised: the native signature is null")
   }
 
   test("SimHash: native codegen kernel ≡ the UDF spelling") {

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.queries.Registry
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,10 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val sf = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
     spark = graft.Sessions.builder("2").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Seq(DetectionsTable, WallFeaturesTable, graft.queries.ShinglesTable,
+      graft.queries.DedupClustersTable, graft.queries.GroupedDetectionsTable,
+      graft.queries.WallClustersTable, graft.queries.AnnIndexTable).foreach(_.invalidate(sf))
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -150,39 +155,109 @@ class SessionCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     SessionCache.drainBuildLog(spark)
   }
 
-  test("a full declared-query sweep keeps live entries bounded (releases fire)") {
-    // Mirrors the Verify/Bench harness loop at sf0.001: run every
-    // declared query in sorted order, fire its QueryDef releases, and
-    // assert the SessionCache high-water mark stays well below the
-    // total number of cacheable stages — i.e. entries actually retire
-    // as their last consumers pass, instead of accumulating for the
-    // life of the app.
-    val dir = "/root/testdata/sf0.001"
-    // Clean slate: entries other suites left behind are caches, so
-    // releasing them is always safe (consumers rebuild).
-    SessionCache.liveKeys(spark).foreach(k => SessionCache.release(spark, k))
+  // ── Sweep release points derived by Registry.releasePoints, over every
+  // declared query at sf0.001. beforeAll invalidates the corpus's input
+  // tables, so each query runs its live derivation: the path that builds
+  // the most entries (dedupClusters from jacPairs, wallFeatLive).
+
+  private def prefix(key: String): String = key.takeWhile(_ != ':')
+
+  private def run(name: String): Unit =
+    Registry.byName(name).build(spark, sf).write.format("noop").mode("overwrite").save()
+
+  /** Key prefixes built since the last drain, one per build. */
+  private def built(): Seq[String] = SessionCache.drainBuildLog(spark).map(e => prefix(e._1))
+
+  private def live(): Set[String] = SessionCache.liveKeys(spark).map(prefix)
+
+  /** Release every entry but `keep`'s (prefixes, for this corpus) and
+    * drain the build log.
+    */
+  private def clearExcept(keep: Set[String]): Unit = {
+    SessionCache.liveKeys(spark).filterNot(k => keep.exists(p => k == s"$p:$sf"))
+      .foreach(SessionCache.release(spark, _))
+    SessionCache.drainBuildLog(spark)
+  }
+
+  /** Run `order`, firing its derived release points after each query.
+    * Returns every key built (a key built twice appears twice) and the
+    * largest number of live entries seen after a query.
+    */
+  private def sweep(order: Seq[String]): (Seq[String], Int) = {
+    val points = Registry.releasePoints(order)
     var highWater = 0
-    graft.queries.Registry.all.sortBy(_.name).foreach { qd =>
-      try qd.build(spark, dir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () } // streaming queries need no cache either way
+    val log = order.flatMap { name =>
+      run(name)
       highWater = math.max(highWater, SessionCache.liveKeys(spark).size)
-      qd.releases.foreach(k => SessionCache.release(spark, s"$k:$dir"))
+      Registry.release(spark, sf, points.getOrElse(name, Nil))
+      built()
     }
-    val after = SessionCache.liveKeys(spark)
-    // <= 3 since r18: srpTightDupMass (one Double of per-corpus
-    // metadata) deliberately lives for the session — its aggregate is a
-    // full signature pass that must not re-bill every sweep.
-    assert(after.size <= 3,
-      s"sweep must end near-empty: live=${after.mkString(",")}")
-    // 10, not 8, since r18: embN + annIndex deliberately survive the
-    // whole q109..q54 IVF window (ADVICE r17 #3 — releasing per
-    // consumer re-ran the corpus count), and q110 carries two guard
-    // entries to its own release point. 13 since r20: contamHits
-    // (shared by q59/q99, released with q99 like the sh5 cache it
-    // derives from), docDigests (the shared md5 pass, q40/q57/q99,
-    // released with q99) and the embDim session value (corpus metadata,
-    // the srpTightDupMass precedent). Still well below the ~30
-    // cacheable stages — the retirement property this test pins.
+    (log, highWater)
+  }
+
+  private def names: Seq[String] = Registry.all.map(_.name).sorted
+
+  /** Every key prefix `name` may touch on an empty cache: its uses and,
+    * transitively, what their builders read.
+    */
+  private def reach(name: String): Set[String] = {
+    def close(k: String): Set[String] =
+      Registry.builtFrom.getOrElse(k, Nil).toSet.flatMap(close) + k
+    Registry.byName(name).uses.toSet.flatMap(close)
+  }
+
+  test("each query builds only keys its uses reach, reads only its uses, and its release points clear it") {
+    clearExcept(Set.empty)
+    names.foreach { name =>
+      clearExcept(Registry.sessionKeys)
+      run(name)
+      val outside = built().toSet -- reach(name)
+      assert(outside.isEmpty, s"$name built keys its uses do not reach: $outside")
+      // With only its declared uses live, the query reads everything it
+      // needs from them: a key it reads directly but does not declare
+      // would be rebuilt here.
+      val uses = Registry.byName(name).uses
+      if (uses.nonEmpty) {
+        clearExcept(Registry.sessionKeys ++ uses)
+        run(name)
+        val undeclared = built()
+        assert(undeclared.isEmpty, s"$name reads keys missing from its uses: $undeclared")
+      }
+      Registry.release(spark, sf, Registry.releasePoints(Seq(name)).getOrElse(name, Nil))
+      assert(live().subsetOf(Registry.sessionKeys),
+        s"$name left entries live: ${live() -- Registry.sessionKeys}")
+    }
+  }
+
+  test("a full declared-query sweep keeps live entries bounded (releases fire)") {
+    // The sorted sweep Verify and Bench run, from an empty cache.
+    clearExcept(Set.empty)
+    val (log, highWater) = sweep(names)
+    assert(log.diff(log.distinct).isEmpty, s"keys built twice: ${log.diff(log.distinct)}")
+    assert(live().subsetOf(Registry.sessionKeys),
+      s"sweep must end with only the session-lifetime keys: live=${live()}")
+    // The retirement property: the high-water mark stays well below the
+    // ~30 cacheable stages, i.e. entries retire as their last consumers
+    // pass instead of accumulating for the life of the app.
     assert(highWater <= 13, s"high-water mark $highWater — entries not retiring")
+    info(s"high-water $highWater, ${log.size} keys built")
+  }
+
+  test("shuffled and subset sweeps build no key twice and end with only the session keys") {
+    val sortedPoints = Registry.releasePoints(names)
+    val lastConsumers = Seq("toks", "embN", "grouped").map { k =>
+      sortedPoints.collectFirst { case (q, keys) if keys.contains(k) => q }.get
+    }
+    val orders = Seq(
+      "shuffled" -> new scala.util.Random(20261018L).shuffle(names),
+      s"without ${lastConsumers.mkString(",")}" -> names.filterNot(lastConsumers.contains))
+    orders.foreach { case (what, order) =>
+      clearExcept(Registry.sessionKeys)
+      val (log, highWater) = sweep(order)
+      assert(log.diff(log.distinct).isEmpty, s"$what: keys built twice: ${log.diff(log.distinct)}")
+      assert(live().subsetOf(Registry.sessionKeys),
+        s"$what: entries left live: ${live() -- Registry.sessionKeys}")
+      info(s"$what: high-water $highWater, ${log.size} keys built")
+    }
   }
 }

@@ -41,8 +41,8 @@ class CurationDagSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("doc_id").collect().toSeq
     val fromQuery = Registry.byName("q99_curation_pipeline").build(spark, sf)
       .collect().toSeq
-    graft.queries.Registry.byName("q99_curation_pipeline").releases
-      .foreach(k => graft.pipeline.SessionCache.release(spark, s"$k:$sf"))
+    Registry.releasePoints(Seq("q99_curation_pipeline")).values
+      .foreach(Registry.release(spark, sf, _))
     assert(fromDag == fromQuery, "DAG output and q99 query output must be identical")
     // Partitioned handoff (VERDICT r6 ask #3): a one-split consumer's
     // filter must become a PARTITION filter — directory pruning at plan
